@@ -35,7 +35,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.sources.readers impo
     fan_out_small_scan,
     input_bytes,
     load_table,
-    tag_like,
 )
 
 # --- shared shingling expressions --------------------------------------------
@@ -819,7 +818,7 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return embedding_cosine_pairs_scaled(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        base.unionByName(clones),
         tau=_SCALED_TAU,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,

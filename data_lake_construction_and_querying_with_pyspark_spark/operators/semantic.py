@@ -30,10 +30,10 @@ replay the identical iterations and hash-match the result:
 
 Scale notes (100 TB): the per-iteration plan is the canonical
 distributed Lloyd's step — corpus × broadcast(k centroids) for
-assignment (map-side, no shuffle), then one aggregation keyed by
-(cell, position) for the update (k·dim groups — tiny). The long-format
-(cell, pos, val) centroid update is what keeps the reduction exact AND
-partial: decimal partial sums combine map-side before the exchange.
+assignment (map-side, no shuffle), then one wide aggregation keyed by
+cell for the update (k rows of dim decimal sums — tiny). Decimal
+per-position sums keep the reduction exact AND partial: they combine
+map-side before the exchange.
 The argmin here uses a row_number window (mirrors the oracle 1:1); on
 a real cluster swap it for ``min_by(struct(cell), struct(d2, cell))``
 in the same groupBy — identical semantics, but the argmin reduces
@@ -572,50 +572,36 @@ def shortlist_assign(
     )
 
 
-def kmeans_update(assigned: DataFrame, dim: int | None = None) -> DataFrame:
+def kmeans_update(assigned: DataFrame, dim: int) -> DataFrame:
     """Exact centroid update: per-(cell, position) decimal mean,
     reassembled into an ordered array. k·dim groups — tiny.
 
-    With ``dim`` known (r12 — it always is when centroids are driver
-    state; see ``_centroid_dim``) the update is ONE wide aggregation:
-    64 per-position ``SUM(CAST(v[i] AS DECIMAL(28,18)))`` columns in a
-    single ``groupBy(cell)`` — one exchange instead of the long-format
-    posexplode's two ((cell,pos) then (cell)), no 64×n exploded rows,
-    and the partials still combine map-side. Values are identical:
-    the same decimal addends per (cell, position) — decimal addition
-    is exact and order-independent — the same single count per cell,
-    and the same cast-to-double division; only the grouping layout
-    changes. ``dim=None`` keeps the long format (callers without
-    driver-resident centroid state)."""
-    if dim:
-        n = F.count(F.lit(1))
-        means = [
-            (F.sum(F.element_at("v", i + 1).cast("decimal(28,18)")).cast("double") / n).alias(
-                f"_m{i}"
-            )
-            for i in range(dim)
-        ]
-        return (
-            assigned.groupBy("cell")
-            .agg(*means)
-            .select("cell", F.array(*[F.col(f"_m{i}") for i in range(dim)]).alias("cent"))
-        )
-    long = assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-    means = long.groupBy("cell", "pos").agg(
-        (F.sum(F.col("val").cast("decimal(28,18)")).cast("double") / F.count(F.lit(1))).alias("m")
-    )
-    return means.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("cent")
+    ``dim`` comes from the driver-resident centroid rows
+    (``_centroid_dim``), so the update is ONE wide aggregation: ``dim``
+    per-position ``SUM(CAST(v[i] AS DECIMAL(28,18)))`` columns in a
+    single ``groupBy(cell)`` — one exchange, no dim×n exploded rows,
+    and the partials combine map-side. Decimal addition is exact and
+    order-independent, so the means do not depend on partitioning.
+    An empty centroid table gives ``dim == 0`` and an empty update."""
+    n = F.count(F.lit(1))
+    means = [
+        (F.sum(F.element_at("v", i + 1).cast("decimal(28,18)")).cast("double") / n).alias(f"_m{i}")
+        for i in range(dim)
+    ]
+    # ``_n`` keeps the aggregate list non-empty when dim == 0; column
+    # pruning drops it from the optimized plan otherwise.
+    return (
+        assigned.groupBy("cell")
+        .agg(n.alias("_n"), *means)
+        .select("cell", F.array(*[F.col(f"_m{i}") for i in range(dim)]).alias("cent"))
     )
 
 
-def _centroid_dim(centroids: DataFrame) -> int | None:
-    """Vector dimensionality from driver-resident centroid rows
-    (zero Spark work); None when the frame has no materialized rows."""
-    rows = getattr(centroids, "_centroid_rows", None)
-    return len(rows[0][1]) if rows else None
+def _centroid_dim(centroids: DataFrame) -> int:
+    """Vector dimensionality from the driver-resident centroid rows
+    every centroid table carries (zero Spark work); 0 when empty."""
+    rows = centroids._centroid_rows
+    return len(rows[0][1]) if rows else 0
 
 
 def _materialize_centroids(spark: SparkSession, centroids: DataFrame) -> DataFrame:

@@ -20,7 +20,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.registry import regi
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
     fan_out_small_scan,
     load_table,
-    tag_like,
 )
 
 _N_QUERIES = 5  # vec_id < 5 are the demo query vectors
@@ -450,10 +449,8 @@ def knn_graph_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r11: fan the unioned corpus out before the norm/LSH folds
     # (guarded no-op at lake scale — fan_out_small_scan docstring).
-    # tag_like: the union derives from the embeddings scan, so the
-    # guard decides from its file metadata (r12 — no plan probe).
     e = with_norm(
-        fan_out_small_scan(tag_like(base.unionByName(clones), raw), "vec_id")
+        fan_out_small_scan(base.unionByName(clones), "vec_id")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     scored = _bucket_scored_candidates(e, _SCALED_TABLES, _SCALED_PLANES)
     best = F.max_by(
@@ -608,7 +605,7 @@ def knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return knn_graph_edges(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        base.unionByName(clones),
         k=_GRAPH_TOP_K,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,
@@ -1572,7 +1569,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return hard_negative_triplets(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        base.unionByName(clones),
         tau=_SCALED_TAU,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,

@@ -74,90 +74,65 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # verification matters most. Everything outside the window stays pinned
 # locally by tests/test_queries_oracle.py, which checks ALL entries.
 #
-# Round-10 rotation (VERDICT r9 directive #1, rotated as the FIRST
-# commit of the round per What's-wrong #4): ALL 37 oracle-bearing
-# entries whose latest driver row is r7 (the contract edge — the
-# scalar packs, set ops, windows, events analytics, knn_brute_force/
-# top1, bpe_encode, rerank, format roundtrips), then 13 picks. Four
-# of the picks are the operators r10 MODIFIES (VERDICT r9 directives
-# #2/#3: weighted_systematic_draw + dsir_resample_draw are r9-green
-# but get the two-phase bucket-offset de-serialization this round;
-# sequence_packing + source_mix_draw are r8-aged AND modified), so
-# the driver re-verifies the changed code on first exposure. The
-# remaining 9 are complexity-first r8-aged picks (the span/cluster/
-# cosine dedup ladder, SemDeDup fold, pagerank, PCA, stupid-backoff,
-# WITH RECURSIVE). The 39 r8-aged entries left out keep green r8
-# rows — exactly 2 rounds old at end of r10, inside the contract —
-# and form r11's must-set (39 ≤ 50: feasible, asserted one round
-# ahead by tests/test_registry_window.py).
-# tests/test_registry_window.py derives this plan from the
-# committed CORRECTNESS_r*.json artifacts and fails CI if mis-planned.
-# Everything outside the window stays pinned locally by
-# tests/test_queries_oracle.py, which checks ALL entries every run.
+# Current rule (checked by tests/test_registry_window.py from the
+# committed CORRECTNESS_r*.json): first every oracle entry whose latest
+# CORRECTNESS row would end this round more than 2 rounds old, then the
+# entries whose executed code changed this round.
 _CHECKED_WINDOW_FIRST: tuple[str, ...] = (
-    # Round-12 rotation. -- r9-aged, contract edge this round: all 41
-    # (every oracle entry whose latest driver row is r9 — 2 rounds old
-    # at start of r12, stale at its end if left out) --
-    "acid_change_feed",
-    "acid_delete_data_skipping",
-    "acid_orders_lifecycle",
-    "asof_latest_order_per_event",
-    "corr_quantity_price_exact",
-    "customer_order_distribution_q13",
-    "decontamination_overlap",
-    "dedup_canonical_corpus",
-    "dedup_canonical_corpus_embeddings",
-    "deterministic_shuffle",
-    "disjunctive_predicates_q19",
-    "doc_repetition_signals",
-    "dominant_supplier_q20",
-    "event_transition_counts",
-    "events_click_purchase_pairs",
-    "events_cusum_drift",
-    "events_hourly_rollup",
-    "flagship_between",
-    "forecast_revenue_q6",
-    "histogram_order_totalprice",
-    "join_fact_fact_revenue",
-    "knn_pq_adc",
-    "large_volume_customers_q18",
-    "late_shipper_q21",
-    "lm_perplexity_buckets",
-    "order_priority_checking_q4",
-    "parts_supplier_counts_q16",
-    "pii_anonymize_customers",
-    "promo_revenue_share_q14",
-    "returned_item_reporting_q10",
-    "sales_opportunity_q22",
-    "shipping_latency_priority_q12",
-    "small_quantity_revenue_q17",
-    "source_mix_temperature_draw",
-    "table_profile_events",
-    "text_fingerprints",
-    "text_quality_scores",
-    "text_token_stats",
-    "top_supplier_q15",
-    "train_val_test_split",
-    "unpivot_lineitem_measures",
-    # -- r11-rewritten paths the driver has not seen on their new code
-    # (VERDICT r11 Next-round #2: rotated out in 121852d BEFORE the
-    # rewrites landed) --
-    "pagerank_trade_network",
-    "dedup_cluster_assignment",
-    "semantic_dedup_embeddings",
-    "dedup_embedding_cosine_pairs",
-    "dedup_repeated_spans",
-    "pricing_summary",
-    # -- operators MODIFIED this round (r12): posting-list pre-prune +
-    # persisted sizes (jaccard kernel), driver-side anchor bucketing +
-    # seed collect gate (shortlist kernel — also covered above via
-    # semantic_dedup_embeddings), corpus-quality scan fan-out. The
-    # remaining shortlist consumers (knn_ivf_*, knn_pq_adc via the
-    # forced list, hard_negative_mining) ride the same kernel; those
-    # not in this window are r11-green and forced into r13's. --
-    "dedup_ngram_jaccard_pairs",
-    "semantic_dedup_sampled",
-    "gopher_quality_filters",
+    # -- latest CORRECTNESS row r10: forced this round --
+    "array_ops_embeddings",
+    "bpe_encode_documents",
+    "bpe_token_counts",
+    "case_when_price_buckets",
+    "cheapest_supplier_per_part",
+    "cohort_retention",
+    "date_functions_pack",
+    "dedup_span_scrub_documents",
+    "distinct_flag_status",
+    "edit_distance_similar_parts",
+    "events_gap_fill_resample",
+    "events_sliding_windows",
+    "events_user_sessions",
+    "funnel_conversion",
+    "important_parts_q11",
+    "in_subquery_urgent_customers",
+    "jsonl_roundtrip_documents",
+    "knn_brute_force",
+    "knn_graph_top1",
+    "lateral_explode_top_tokens",
+    "lm_stupid_backoff_scores",
+    "orc_roundtrip_customer",
+    "pca_top_component",
+    "percentiles_by_segment",
+    "product_profit_q9",
+    "range_join_quantity_band",
+    "recursive_transition_paths",
+    "scalar_subquery_above_avg",
+    "sequence_packing",
+    "set_except_priorities",
+    "set_intersect_priorities",
+    "set_union_priorities",
+    "source_mix_draw",
+    "string_functions_pack",
+    "text_chunk_windows",
+    "text_language_id",
+    "two_nation_trade_q7",
+    "union_by_name_projections",
+    "weighted_systematic_draw",
+    "window_order_gap_days",
+    "window_rank_pack",
+    "window_trailing_30day_spend",
+    # -- executed code changed this round (the scan fan-out guard;
+    # knn_graph_top1 is above), then the r12 carry-overs: knn_ivf_*
+    # (one-exchange k-means update) and dedup_minhash_near_dup --
+    "knn_graph_topk",
+    "hard_negative_mining",
+    "knn_ivf_deterministic",
+    "knn_ivf_pq",
+    "dedup_minhash_near_dup",
+    "bm25_topk_documents",
+    "tfidf_top_terms_per_doc",
+    "rerank_bm25_candidates",
 )
 
 

@@ -199,115 +199,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if df is None:
         path = f"{sf_dir}/{name}.parquet"
         df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
-        df._lake_scan_paths = (path,)  # consumed by fan_out_small_scan's guard
         _TABLE_PLAN_CACHE[key] = df
     return df
 
 
 def fan_out_small_scan(df: DataFrame, *keys: str) -> DataFrame:
-    """Guarded scan fan-out (r11; optimization guide §2.5 "input skew:
-    one huge unsplittable file → repartition immediately after the
-    read"): when ``df`` carries fewer partitions than the session's
-    core count — a single-row-group parquet file, a tiny table, a
-    narrow union of such scans — hash-repartition it by ``keys`` to
-    ``defaultParallelism`` so the CPU-heavy per-row work that follows
-    (tokenization, fold dot products, decimal casts) runs on every
-    core instead of one task. Parquet row groups are the minimum scan
-    split: a 1-row-group file is unsplittable no matter what
-    ``maxPartitionBytes`` says, so without this the whole pre-shuffle
-    pipeline of such a table is single-threaded.
+    """Hash-repartition ``df`` by ``keys`` to ``defaultParallelism``
+    when the files behind it cannot fill every core (optimization
+    guide §2.5 "input skew: one huge unsplittable file → repartition
+    immediately after the read"), so the CPU-heavy per-row work that
+    follows (tokenization, fold dot products, decimal casts) runs on
+    every core instead of one task. Parquet row groups are the minimum
+    scan split: a 1-row-group file is unsplittable no matter what
+    ``maxPartitionBytes`` says.
 
-    Scale behavior: at production scale any real scan already has
-    ≥ cores partitions and this is a NO-OP — zero added exchange, so
-    the 100 TB plan is untouched and scan-side predicate pushdown is
-    unaffected where it matters.
+    The rule, read from Spark's own file index: fan out when the frame
+    reads fewer files than ``defaultParallelism`` AND fewer bytes than
+    ``defaultParallelism × spark.sql.files.maxPartitionBytes`` (the
+    session's parsed value, so ``'128MB'`` means 128 MiB). Either
+    condition alone gives the scan at least one split per core, so at
+    lake scale this is a NO-OP: no added exchange, the 100 TB plan and
+    its scan-side pushdown untouched. The files are only stat'ed when
+    the count is already below parallelism. Unions and projections of
+    a scan are judged by the files they read; a frame with no
+    file-backed leaf (``createDataFrame``, ``range``) is returned
+    unchanged.
 
     Hash (not round-robin) partitioning on a stable key: keyless
     ``repartition(n)`` pays a local sort of its input
     (``sortBeforeRepartition``, guide §2.5) and that sort lands in the
     single scan task this helper exists to relieve; hashing a stable
     high-cardinality key is deterministic, sort-free, and retry-safe.
-
-    Values are unaffected by construction: every registered operator is
-    partitioning-independent per the registry's determinism contract
-    (exact decimal sums, keyed equi-joins, total-order tie-breaks).
-
-    Guard cost (r12, ADVICE r11 #5): the r11 guard called
-    ``df.rdd.getNumPartitions()``, which forces full physical planning
-    and RDD conversion of the subtree at query-CONSTRUCTION time —
-    ~0.1-0.3 s per call on derived frames, paid inside every bench
-    timing. Frames produced by :func:`load_table` now carry their scan
-    paths, so the guard reads FILE METADATA instead (cached per
-    session+path): a scan whose file count and byte size can both fill
-    every core is left alone. Only path-less frames (mid-pipeline
-    unions and projections) fall back to the physical-plan probe."""
+    Values are unaffected: every registered operator is
+    partitioning-independent per the registry's determinism contract."""
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    paths = getattr(df, "_lake_scan_paths", None)
-    small = scan_paths_are_small(spark, paths) if paths else None
-    if small is None:
-        small = df.rdd.getNumPartitions() < parallelism
-    if not small:
+    n_files = len(df.inputFiles())
+    if n_files == 0 or n_files >= parallelism:
+        return df
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if input_bytes(df) >= parallelism * split_bytes:
         return df
     from pyspark.sql import functions as F
 
     return df.repartition(parallelism, *[F.col(k) for k in keys])
-
-
-def tag_like(df: DataFrame, src: DataFrame) -> DataFrame:
-    """Propagate ``src``'s scan-path metadata (set by :func:`load_table`)
-    onto a frame DERIVED from it — unions with clone rows, projections —
-    so :func:`fan_out_small_scan`'s guard stays metadata-based for such
-    frames instead of falling back to the physical-plan probe. The
-    derived frame's partition count IS the scan's (narrow lineage), so
-    the decision is unchanged."""
-    paths = getattr(src, "_lake_scan_paths", None)
-    if paths is not None:
-        df._lake_scan_paths = paths
-    return df
-
-
-# (appId, paths, parallelism) -> bool; file metadata is immutable for
-# the read-only test corpora, and a changed session gets a fresh key.
-_SMALL_SCAN_CACHE: dict[tuple, bool] = {}
-
-
-def scan_paths_are_small(spark: SparkSession, paths: tuple[str, ...]) -> bool | None:
-    """True when a parquet scan over ``paths`` cannot fill every core:
-    fewer files than ``defaultParallelism`` AND fewer total bytes than
-    ``defaultParallelism × maxPartitionBytes`` (each condition alone
-    guarantees ≥ cores scan splits at production scale, so this is a
-    no-op there — same decision the ``df.rdd`` probe made, without the
-    physical planning). Local filesystem only; returns None (unknown)
-    for remote URIs so the caller can fall back."""
-    import os as _os
-
-    sc = spark.sparkContext
-    key = (sc.applicationId, paths, sc.defaultParallelism)
-    if key in _SMALL_SCAN_CACHE:
-        return _SMALL_SCAN_CACHE[key]
-    n_files = 0
-    total = 0
-    for p in paths:
-        if "://" in p and not p.startswith("file://"):
-            return None
-        # file:///abs/path strips to /abs/path; plain paths pass through
-        local = p.split("://", 1)[1] if p.startswith("file://") else p
-        if _os.path.isdir(local):
-            for entry in _os.scandir(local):
-                if entry.is_file() and not entry.name.startswith(("_", ".")):
-                    n_files += 1
-                    total += entry.stat().st_size
-        elif _os.path.isfile(local):
-            n_files += 1
-            total += _os.path.getsize(local)
-        else:
-            return None
-    max_pb = int("".join(ch for ch in spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728") if ch.isdigit()) or "134217728")
-    par = sc.defaultParallelism
-    small = n_files < par and total < par * max_pb
-    _SMALL_SCAN_CACHE[key] = small
-    return small
 
 
 def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

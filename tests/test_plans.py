@@ -598,3 +598,93 @@ def test_cusum_segmented_scan(spark, queries):
     assert re.search(r"hashpartitioning\(event_type#\d+, _seg#\d+", plan), plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+# --- scan fan-out guard (sources/readers.fan_out_small_scan) ---------------
+
+_FAN_OUT_ENTRIES = (
+    "pricing_summary",
+    "bm25_topk_documents",
+    "tfidf_top_terms_per_doc",
+    "doc_repetition_signals",
+    "gopher_quality_filters",
+    "dedup_embedding_cosine_pairs",
+    "knn_graph_top1",
+    "knn_graph_topk",
+    "hard_negative_mining",
+    "dedup_repeated_spans",
+)
+
+
+@pytest.mark.parametrize("name", _FAN_OUT_ENTRIES)
+def test_registered_fan_out_happens_on_small_scans(spark, queries, name):
+    """Every registered builder that calls fan_out_small_scan reads
+    single-file tables at sf0.001, so its plan must carry the fan-out
+    (``_only_fanout_exchanges`` allows it; this requires it)."""
+    plan = _plan(queries[name](spark, SF_SMOKE))
+    spark.catalog.clearCache()
+    assert "REPARTITION_BY_NUM" in plan, plan
+
+
+@pytest.mark.parametrize("max_bytes", ["128MB", "1g"])
+def test_fan_out_reads_unit_byte_sizes(spark, tmp_path, max_bytes):
+    """``spark.sql.files.maxPartitionBytes`` in unit form is read as
+    Spark parses it: '128MB' is 128 MiB, so a 65 KB single-file scan is
+    small and fans out. A fresh path means no memoized plan."""
+    import shutil
+
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
+        fan_out_small_scan,
+        load_table,
+    )
+
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", tmp_path / "documents.parquet")
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, max_bytes)
+    try:
+        df = fan_out_small_scan(load_table(spark, str(tmp_path), "documents"), "doc_id")
+    finally:
+        spark.conf.set(key, saved)
+    assert "REPARTITION_BY_NUM" in _plan(df)
+
+
+def test_fan_out_union_of_scan_and_derived_rows(spark):
+    """A union of a scan with rows derived from it reads one small file,
+    so it fans out; the decision comes from Spark's file index, not from
+    anything attached to the frame."""
+    from pyspark.sql import functions as F
+
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
+        fan_out_small_scan,
+        load_table,
+    )
+
+    raw = load_table(spark, SF_SMOKE, "embeddings")
+    clones = raw.filter(F.col("vec_id") % 50 == 0).withColumn("vec_id", F.col("vec_id") + 1_000_000)
+    union = raw.unionByName(clones)
+    assert vars(union).keys() == vars(spark.range(1)).keys()
+    assert "REPARTITION_BY_NUM" in _plan(fan_out_small_scan(union, "vec_id"))
+
+
+def test_fan_out_leaves_many_file_scan_alone(spark, tmp_path):
+    """One file per core already gives the scan a split per core."""
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
+        fan_out_small_scan,
+    )
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert len(df.inputFiles()) >= n
+    assert fan_out_small_scan(df, "id") is df
+
+
+def test_fan_out_leaves_local_frames_alone(spark):
+    """A frame with no file-backed leaf is returned unchanged."""
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
+        fan_out_small_scan,
+    )
+
+    df = spark.createDataFrame([(1, "a b"), (2, "c")], "doc_id long, text string")
+    assert fan_out_small_scan(df, "doc_id") is df

@@ -205,3 +205,17 @@ def test_driver_bucketing_matches_distributed_subtree(spark, monkeypatch):
     monkeypatch.undo()
     spark.catalog.clearCache()
     assert a == b
+
+
+def test_kmeans_update_of_empty_centroid_table_is_empty(spark, monkeypatch):
+    """Both seed paths attach driver rows, so an empty corpus gives
+    dim 0 and the one wide update returns no centroids."""
+    import data_lake_construction_and_querying_with_pyspark_spark.operators.semantic as sem
+
+    base = sem._with_vsq(spark.createDataFrame([], "vec_id long, v array<double>"))
+    assigned = base.select("vec_id", "v", sem.F.lit(0).alias("cell"))
+    for gate in (sem._SEED_COLLECT_GATE_K, 0):
+        monkeypatch.setattr(sem, "_SEED_COLLECT_GATE_K", gate)
+        cents = sem._seed_centroids(spark, base, 8)
+        assert sem._centroid_dim(cents) == 0
+        assert sem.kmeans_update(assigned, sem._centroid_dim(cents)).collect() == []
