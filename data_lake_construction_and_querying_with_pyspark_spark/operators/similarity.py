@@ -6,9 +6,12 @@ path (probabilistic recall → rows-only driver check + a recall-vs-
 brute-force assertion in tests/test_similarity.py).
 
 All vector math stays JVM-side: ``F.zip_with`` + ``F.aggregate`` fold
-the dot product inside whole-stage codegen — no Python, no UDF. The
-sequential left fold is bit-identical to DuckDB's list_dot_product,
-which is what makes the oracle comparison exact.
+the dot product — no Python, no UDF. It is not generated code:
+``ArrayAggregate`` and ``ZipWith`` are ``CodegenFallback`` expressions,
+so the generated projections call their interpreted ``eval``. That is
+why the scale twins in ``semantic_vectorized.py`` score with numpy
+instead. The sequential left fold is bit-identical to DuckDB's
+list_dot_product, which is what makes the oracle comparison exact.
 """
 
 from __future__ import annotations
@@ -31,7 +34,8 @@ def as_double_vec(col) -> F.Column:
 
 
 def dot(a, b) -> F.Column:
-    """Sequential-fold double dot product (deterministic, codegen'd)."""
+    """Sequential-fold double dot product (deterministic; evaluated by
+    the interpreted higher-order-function path, not generated code)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
@@ -237,7 +241,7 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def array_ops_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array scalar surface over the vector column: size, element
-    access, fold-based norm — all codegen'd, no UDF."""
+    access, fold-based norm — all JVM built-ins, no UDF."""
     e = load_table(spark, sf_dir, "embeddings")
     v = as_double_vec(F.col("embedding"))
     d = dot(v, v)
@@ -484,7 +488,7 @@ def _bucket_scored_candidates(
     co-locates both endpoints, and cosine is computed in the join
     projection so every downstream exchange carries only 24-byte
     scored rows. Multi-table pair collisions cost a few redundant
-    64-mult dot products (pure codegen'd CPU) — the right trade
+    64-mult dot products (pure JVM CPU) — the right trade
     against tens of GB of shuffle. The dedup stays value-exact:
     cosine is the same sequential fold on the same doubles in every
     colliding table, so duplicate rows are bit-identical."""

@@ -7,13 +7,15 @@ SURVEY.md §2.8.5 flags the double-computation). At 100 TB each action is
 a full table scan, and ``df.count() - df.distinct().count()`` is two
 scans plus an all-columns shuffle.
 
-This module computes the same metrics in ONE aggregation pass:
+This module computes the same metrics in ONE aggregation pass over one
+scan: a ``groupBy(all columns)`` multiplicity table (the single shuffle
+that ``distinct`` needs anyway, with map-side partial counts), then one
+global aggregate over it:
 
-* total rows, per-column null counts → one global hash-agg (partial
-  aggregation map-side, a single scalar row shuffled).
-* duplicate count → one ``groupBy(all columns)`` instead of
-  ``distinct().count()`` + ``count()``: the same single shuffle that
-  distinct needs, but sharing the scan and producing both counts.
+* total rows → ``sum(multiplicity)``; distinct rows → ``count(*)``.
+* per-column null counts → ``sum(multiplicity)`` over the groups whose
+  key is NULL in that column (NULL keys group together, so every null
+  row is counted exactly once).
 """
 
 from __future__ import annotations
@@ -42,47 +44,31 @@ class ValidationReport:
         return len(self.columns)
 
 
-def null_count_exprs(df: DataFrame) -> list:
-    """One ``sum(isnull as int)`` per column — reference A3
-    (``scripts/...pyspark.py:93``), aliased to ``null_<col>``."""
-    # coalesce: SUM over zero rows is NULL, and an empty input must
-    # report 0 nulls, not None (hypothesis-found edge case).
-    return [
-        F.coalesce(F.sum(F.col(c).isNull().cast("int")), F.lit(0)).alias(f"null_{c}")
-        for c in df.columns
-    ]
-
-
 def validation_summary_df(df: DataFrame) -> DataFrame:
-    """The one-row validation summary as a DataFrame (lazy, one pass)."""
-    return df.agg(F.count(F.lit(1)).alias("total_rows"), *null_count_exprs(df))
-
-
-def duplicate_stats_df(df: DataFrame) -> DataFrame:
-    """Row-multiplicity profile: one shuffle over all columns.
-
-    Returns one row: (total_rows, distinct_rows, duplicate_rows).
-    Map-side partial counts make this cheaper than distinct() at scale,
-    and it subsumes both A1 and A2.
-    """
+    """The one-row validation summary as a DataFrame (lazy, one scan):
+    ``total_rows``, ``distinct_rows`` and one ``null_<col>`` per column
+    (reference A1-A3, ``scripts/...pyspark.py:90-93``)."""
     per_row = df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias("multiplicity"))
+    # coalesce: SUM over zero rows is NULL, and an empty input must
+    # report 0 rows and 0 nulls, not None (hypothesis-found edge case).
     return per_row.agg(
-        F.sum("multiplicity").alias("total_rows"),
+        F.coalesce(F.sum("multiplicity"), F.lit(0)).alias("total_rows"),
         F.count(F.lit(1)).alias("distinct_rows"),
-        (F.sum("multiplicity") - F.count(F.lit(1))).alias("duplicate_rows"),
+        *[
+            F.coalesce(F.sum(F.when(F.col(c).isNull(), F.col("multiplicity"))), F.lit(0)).alias(f"null_{c}")
+            for c in df.columns
+        ],
     )
 
 
 def validate(df: DataFrame) -> ValidationReport:
-    """Compute the reference's validation metrics in two jobs total
-    (vs the reference's five)."""
-    nulls_row = validation_summary_df(df).collect()[0]
-    dup_row = duplicate_stats_df(df).collect()[0]
-    null_counts = {c: nulls_row[f"null_{c}"] for c in df.columns}
+    """Compute the reference's validation metrics in one scan (vs the
+    reference's five)."""
+    row = validation_summary_df(df).collect()[0]
     return ValidationReport(
-        total_rows=dup_row["total_rows"] or 0,
-        distinct_rows=dup_row["distinct_rows"] or 0,
-        null_counts=null_counts,
+        total_rows=row["total_rows"],
+        distinct_rows=row["distinct_rows"],
+        null_counts={c: row[f"null_{c}"] for c in df.columns},
         columns=list(df.columns),
     )
 
@@ -98,7 +84,7 @@ def attach_observed_metrics(df: DataFrame, name: str = "validation"):
     own aggregation pass (still one scan), this rides the write's scan
     for free. Exact duplicate counting is the one metric that cannot
     ride along (it needs a shuffle of its own); the sketch stands in,
-    and ``duplicate_stats_df`` remains the exact tool.
+    and ``validation_summary_df`` remains the exact tool.
     """
     from pyspark.sql import Observation
 

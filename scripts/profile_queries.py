@@ -1,7 +1,9 @@
 """Per-query profiling for the optimization rounds: best-of-2 noop
 timing (bench.py methodology), Spark JOB COUNT per query (job-launch
 overhead is the dominant cost for several sub-second-data queries at
-sf0.1), and optional .explain("formatted") dumps.
+sf0.1), classes COMPILED per attempt (CodegenMetrics count delta: a
+warm attempt that still compiles is missing the generated-class cache),
+and optional .explain("formatted") dumps.
 
 Usage:
   python scripts/profile_queries.py                          # headline set
@@ -11,7 +13,9 @@ Usage:
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32) — same contract as bench.py.
-Prints one JSON line per query: {"name", "best_sec", "runs", "n_jobs"}.
+Prints one JSON line per query:
+{"name", "best_sec", "runs", "n_jobs", "n_compiles"} — ``n_compiles``
+has one entry per attempt, aligned with ``runs``.
 """
 
 from __future__ import annotations
@@ -53,6 +57,7 @@ def main() -> None:
         time.sleep(0.3)
 
     tracker = spark.sparkContext.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     out = []
     for name in names:
         if name not in qs:
@@ -67,16 +72,19 @@ def main() -> None:
                 f.write(plan)
         runs = []
         n_jobs = None
+        n_compiles = []
         for attempt in range(2):
             settle()
             group = f"profile:{name}:{attempt}"
             spark.sparkContext.setJobGroup(group, name)
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.time()
             run(qs[name](spark, sf_dir))
             runs.append(round(time.time() - t0, 3))
             n_jobs = len(tracker.getJobIdsForGroup(group))
+            n_compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-        rec = {"name": name, "best_sec": min(runs), "runs": runs, "n_jobs": n_jobs}
+        rec = {"name": name, "best_sec": min(runs), "runs": runs, "n_jobs": n_jobs, "n_compiles": n_compiles}
         out.append(rec)
         print(json.dumps(rec), flush=True)
     total = round(sum(r["best_sec"] for r in out), 3)
